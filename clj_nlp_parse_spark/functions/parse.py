@@ -217,11 +217,6 @@ def token_at(panon: str, i: int):
         f"{i + 1})")
 
 
-def mentions_union(panon: str = "panon"):
-    """O6 union of mention sources (parse.clj:194-205)."""
-    return F.expr(f"concat({panon}.mentions, {panon}.tok_re_mentions)")
-
-
 def mentions_for_token(panon: str, tok_pos: int):
     """O7 mentions whose token-range contains the position
     (parse.clj:207-211)."""

@@ -93,18 +93,6 @@ def annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
              .withColumn("toks", annotated_tokens_col("words"))
 
 
-def spread_small_input(df: DataFrame) -> DataFrame:
-    """Ensure a per-doc Arrow kernel gets cluster-wide parallelism (r6):
-    a small parquet scan arrives as ONE input split, which would
-    serialize the kernel. Repartition ONLY when the scan has fewer
-    partitions than the default parallelism — at corpus scale input
-    splits abound and no shuffle is added."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
-
 def go_word_forms_col(toks: str = "toks", form: str = "word") -> Column:
     """go-word-forms (reference stopword.clj:40-50): filter go words,
     project canonical form (default lower text; alt 'lemma')."""

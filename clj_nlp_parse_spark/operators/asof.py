@@ -32,6 +32,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clj_nlp_parse_spark.functions import kernel as K
+
 
 def asof_join(
     left: DataFrame,
@@ -318,7 +320,8 @@ def _asof_merge(left, right, on, left_ts, right_ts, value_cols,
     # cogroup co-partitions both sides by bucket — one shuffle each side,
     # merge_asof(by=key) inside Arrow batches.
     return (l.groupBy("__bkt").cogroup(r.groupBy("__bkt"))
-            .applyInPandas(merge, schema=out_schema))
+            .applyInPandas(K.declare("asof_merge", merge),
+                           schema=out_schema))
 
 
 def _asof_union_window_split(left, right, on, left_ts, right_ts, value_cols,

@@ -15,18 +15,18 @@ documented simplification; sentence-bounded chunking would add the
 sentence index (from the sentence splitter's cumulative token counts) to
 the run key.
 
-Scale shape: explode tokens with position → lag() per doc marks run starts
-→ window cumsum assigns run ids → one hash agg per (doc, run) → filter on
-head presence. Two window/agg shuffles on the doc key, no per-row quadratic
-scan, identical formulation in both dialects.
+Scale shape: one declared Arrow batch stage per document batch
+(functions/kernel.py), both labels in one pass, no shuffle. The DuckDB
+oracle states the same contract relationally: lag() per doc marks run
+starts → window cumsum assigns run ids → one agg per (doc, run) → filter
+on head presence.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
 from clj_nlp_parse_spark import dialect
+from clj_nlp_parse_spark.dialect import _q
+from clj_nlp_parse_spark.functions import kernel as K
 
 # PRP is an NP constituent and head (a pronoun IS a noun phrase — the
 # reference golden sr_parse_test.clj:26-31 has NP(PRP I))
@@ -35,61 +35,6 @@ NP_TAGS = ("DT", "PRP", "PRP$", "CD", "JJ", "JJR", "JJS",
 NP_HEAD_TAGS = ("PRP", "NN", "NNS", "NNP", "NNPS")
 VP_TAGS = ("MD", "RB", "VB", "VBD", "VBG", "VBN", "VBP", "VBZ")
 VP_HEAD_TAGS = ("VB", "VBD", "VBG", "VBN", "VBP", "VBZ")
-
-
-from clj_nlp_parse_spark.dialect import _q
-
-
-def chunks(df: DataFrame, tags: tuple[str, ...] = NP_TAGS,
-           head_tags: tuple[str, ...] = NP_HEAD_TAGS,
-           label: str = "NP",
-           id_col: str = "doc_id",
-           text_col: str = "text") -> DataFrame:
-    """Maximal-run chunks over the deterministic tagger's output.
-
-    Output: (id, label, chunk_index [0-based per doc], tok_beg, tok_end
-    [token range, end exclusive], head [last head-tagged word], text
-    [space-joined words])."""
-    in_set = ", ".join(_q(t) for t in tags)
-    head_set = ", ".join(_q(t) for t in head_tags)
-    words = F.expr(dialect.tokens_expr(text_col, "spark"))
-    pos_case = dialect.pos_case_expr("t", "spark")
-    tok = (df.select(F.col(id_col), words.alias("words"))
-           .select(id_col,
-                   F.posexplode(F.expr(
-                       f"transform(words, t -> named_struct("
-                       f"'w', t, 'tag', ({pos_case})))"))
-                   .alias("pos", "x"))
-           .select(id_col, "pos",
-                   F.col("x.w").alias("w"), F.col("x.tag").alias("tag"))
-           .where(F.expr(f"tag IN ({in_set})")))
-    w_ord = Window.partitionBy(id_col).orderBy("pos")
-    runs = tok.withColumn(
-        "start", F.when(
-            F.lag("pos").over(w_ord).isNull()
-            | (F.lag("pos").over(w_ord) != F.col("pos") - 1), 1)
-        .otherwise(0)
-    ).withColumn("run_id", F.sum("start").over(
-        w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    agg = (runs.groupBy(id_col, "run_id")
-           .agg(F.min("pos").alias("tok_beg"),
-                (F.max("pos") + 1).alias("tok_end"),
-                F.max(F.when(F.expr(f"tag IN ({head_set})"),
-                             F.col("pos"))).alias("head_pos"),
-                F.array_join(F.array_sort(F.collect_list(
-                    F.struct("pos", "w"))).getField("w"), " ").alias("text"),
-                F.max(F.when(F.expr(f"tag IN ({head_set})"),
-                             F.struct("pos", F.col("w").alias("hw"))))
-                .getField("hw").alias("head"))
-           .where(F.col("head_pos").isNotNull()))
-    w_idx = Window.partitionBy(id_col).orderBy("tok_beg")
-    return (agg.select(
-        F.col(id_col),
-        F.lit(label).alias("label"),
-        (F.row_number().over(w_idx) - 1).cast("long").alias("chunk_index"),
-        F.col("tok_beg").cast("long"),
-        F.col("tok_end").cast("long"),
-        "head", "text"))
 
 
 def chunks_sql(tags: tuple[str, ...], head_tags: tuple[str, ...],
@@ -133,83 +78,40 @@ def chunks_sql(tags: tuple[str, ...], head_tags: tuple[str, ...],
     FROM agg"""
 
 
-def chunk_rows(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+_SPECS = (("NP", frozenset(NP_TAGS), frozenset(NP_HEAD_TAGS)),
+          ("VP", frozenset(VP_TAGS), frozenset(VP_HEAD_TAGS)))
+
+
+def _chunk_rows(text: str) -> list[tuple]:
     """NP and VP chunk rows (id_col, label, chunk_index, tok_beg,
-    tok_end, head, text) in ONE declared Arrow batch stage (r6
-    optimization, guide §4: the fused-parser precedent) — the relational
-    form paid two explode→window→window→agg pipelines (one per label);
-    the kernel applies the identical maximal-run + head-election contract
-    per doc. All values are ints/strings, oracle-gated at both SFs."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    specs = (("NP", frozenset(NP_TAGS), frozenset(NP_HEAD_TAGS)),
-             ("VP", frozenset(VP_TAGS), frozenset(VP_HEAD_TAGS)))
-
-    def kern(batches):
-        import re
-        tok = re.compile("[a-z0-9']+")
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o = {k: [] for k in ("doc", "label", "ci", "beg", "end",
-                                 "head", "text")}
-            for did, text in zip(ids, texts):
-                ws = tok.findall((text or "").lower())
-                tags = [dialect.pos_py(w) for w in ws]
-                for label, in_set, head_set in specs:
-                    ci = 0
-                    i = 0
-                    n = len(ws)
-                    while i < n:
-                        if tags[i] not in in_set:
-                            i += 1
-                            continue
-                        j = i
-                        head = None
-                        while j < n and tags[j] in in_set:
-                            if tags[j] in head_set:
-                                head = ws[j]
-                            j += 1
-                        if head is not None:
-                            o["doc"].append(did)
-                            o["label"].append(label)
-                            o["ci"].append(ci)
-                            o["beg"].append(i)
-                            o["end"].append(j)
-                            o["head"].append(head)
-                            o["text"].append(" ".join(ws[i:j]))
-                            ci += 1
-                        i = j
-            yield pa.record_batch(
-                [pa.array(o["doc"], pa.int64()), pa.array(o["label"]),
-                 pa.array(o["ci"], pa.int64()),
-                 pa.array(o["beg"], pa.int64()),
-                 pa.array(o["end"], pa.int64()),
-                 pa.array(o["head"], pa.string()),
-                 pa.array(o["text"], pa.string())],
-                names=[id_col, "label", "chunk_index", "tok_beg",
-                       "tok_end", "head", "text"])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col],
-         T.StructField("label", T.StringType()),
-         T.StructField("chunk_index", T.LongType()),
-         T.StructField("tok_beg", T.LongType()),
-         T.StructField("tok_end", T.LongType()),
-         T.StructField("head", T.StringType()),
-         T.StructField("text", T.StringType())])
-    return inp.mapInArrow(kern, out_schema)
+    tok_end, head, text) in ONE declared Arrow batch stage — the
+    maximal-run + head-election contract per doc, NP rows then VP rows.
+    All values are ints/strings, oracle-gated at both SFs."""
+    ws = K.tokens(text)
+    tags = [dialect.pos_py(w) for w in ws]
+    n = len(ws)
+    out = []
+    for label, in_set, head_set in _SPECS:
+        ci = i = 0
+        while i < n:
+            if tags[i] not in in_set:
+                i += 1
+                continue
+            j = i
+            head = None
+            while j < n and tags[j] in in_set:
+                if tags[j] in head_set:
+                    head = ws[j]
+                j += 1
+            if head is not None:
+                out.append((label, ci, i, j, head, " ".join(ws[i:j])))
+                ci += 1
+            i = j
+    return out
 
 
-def np_chunks(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    return chunks(df, NP_TAGS, NP_HEAD_TAGS, "NP", id_col, text_col)
-
-
-def vp_chunks(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    return chunks(df, VP_TAGS, VP_HEAD_TAGS, "VP", id_col, text_col)
+chunk_rows = K.text_kernel(
+    "chunk_rows",
+    ["label string", "chunk_index long", "tok_beg long", "tok_end long",
+     "head string", "text string"],
+    _chunk_rows)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark import dialect
+from clj_nlp_parse_spark.functions import kernel as K
 
 # Fixed odd multipliers/addends (< 2^31) for the k min-hash permutations —
 # generated once from a seeded PRNG, pinned as literals so every engine and
@@ -157,7 +158,7 @@ def _hash_segments(col):
 
 
 def _minhash_arrow_fn(id_col: str):
-    """mapInArrow kernel for the K min-hash permutations (r6 optimization,
+    """Arrow batch kernel for the K min-hash permutations (r6 optimization,
     guide §4.2): the SQL form ran K=16 interpreted array folds per row
     (aggregate/transform are CodegenFallback); this computes
     min((a_i*h + b_i) % MOD) per permutation with vectorized segment
@@ -169,64 +170,52 @@ def _minhash_arrow_fn(id_col: str):
     A = np.array(MINHASH_A, dtype=np.int64)
     B = np.array(MINHASH_B, dtype=np.int64)
 
-    def sig(batches):
-        for batch in batches:
-            n = len(batch)
-            if n == 0:
-                continue
-            flat, lengths, offs = _hash_segments(batch.column("__hs"))
-            empty = lengths == 0
-            outs = []
-            # reduceat quirks: an empty segment (offs[i] == offs[i+1])
-            # returns vals[offs[i]] instead of the identity (masked out
-            # below), and a trailing empty segment would put len(vals)
-            # itself in the index list — appending ONE identity element
-            # keeps every index valid WITHOUT clipping (clipping an index
-            # shrinks the PREVIOUS row's segment — a real bug the fuzz
-            # suite caught). The sentinel only ever joins the LAST row's
-            # reduction, where the identity is a no-op.
-            for i in range(MINHASH_K):
-                vals = (A[i] * flat + B[i]) % MINHASH_MOD
-                ext = np.concatenate(
-                    [vals, np.array([MINHASH_MOD], dtype=np.int64)])
-                mins = np.minimum.reduceat(ext, offs[:-1])
-                mins = np.where(empty, MINHASH_MOD, mins)
-                outs.append(pa.array(mins, type=pa.int64()))
-            yield pa.record_batch(
-                [batch.column(id_col)] + outs,
-                names=[id_col] + [f"mh_{i}" for i in range(MINHASH_K)])
+    def sig(batch):
+        flat, lengths, offs = _hash_segments(batch.column("__hs"))
+        empty = lengths == 0
+        outs = []
+        # reduceat quirks: an empty segment (offs[i] == offs[i+1])
+        # returns vals[offs[i]] instead of the identity (masked out
+        # below), and a trailing empty segment would put len(vals)
+        # itself in the index list — appending ONE identity element
+        # keeps every index valid WITHOUT clipping (clipping an index
+        # shrinks the PREVIOUS row's segment — a real bug the fuzz
+        # suite caught). The sentinel only ever joins the LAST row's
+        # reduction, where the identity is a no-op.
+        for i in range(MINHASH_K):
+            vals = (A[i] * flat + B[i]) % MINHASH_MOD
+            ext = np.concatenate(
+                [vals, np.array([MINHASH_MOD], dtype=np.int64)])
+            mins = np.minimum.reduceat(ext, offs[:-1])
+            mins = np.where(empty, MINHASH_MOD, mins)
+            outs.append(pa.array(mins, type=pa.int64()))
+        return [batch.column(id_col)] + outs
 
     return sig
 
 
 def _simhash_arrow_fn(id_col: str, bits: int):
-    """mapInArrow kernel for simhash (r6, guide §4.2): the SQL form ran
+    """Arrow batch kernel for simhash (r6, guide §4.2): the SQL form ran
     `bits` interpreted folds per row; this does one signed popcount per
     bit plane with segment sums. Pure int64 arithmetic — bit-identical
     to the SQL/DuckDB rendering (empty rows sum to 0 per plane → 0)."""
     import numpy as np
     import pyarrow as pa
 
-    def sh(batches):
-        for batch in batches:
-            n = len(batch)
-            if n == 0:
-                continue
-            flat, lengths, offs = _hash_segments(batch.column("__hs"))
-            empty = lengths == 0
-            res = np.zeros(n, dtype=np.int64)
-            # identity-sentinel append — see _minhash_arrow_fn on why
-            # indices must not be clipped
-            for k in range(bits):
-                signed = 2 * ((flat >> k) & 1) - 1
-                ext = np.concatenate(
-                    [signed, np.array([0], dtype=np.int64)])
-                s = np.add.reduceat(ext, offs[:-1])
-                s = np.where(empty, 0, s)
-                res += np.where(s > 0, np.int64(1) << k, 0)
-            yield pa.record_batch(
-                [batch.column(id_col), pa.array(res, type=pa.int64())],
-                names=[id_col, "simhash"])
+    def sh(batch):
+        flat, lengths, offs = _hash_segments(batch.column("__hs"))
+        empty = lengths == 0
+        res = np.zeros(len(batch), dtype=np.int64)
+        # identity-sentinel append — see _minhash_arrow_fn on why
+        # indices must not be clipped
+        for k in range(bits):
+            signed = 2 * ((flat >> k) & 1) - 1
+            ext = np.concatenate(
+                [signed, np.array([0], dtype=np.int64)])
+            s = np.add.reduceat(ext, offs[:-1])
+            s = np.where(empty, 0, s)
+            res += np.where(s > 0, np.int64(1) << k, 0)
+        return [batch.column(id_col), pa.array(res, type=pa.int64())]
 
     return sh
 
@@ -247,17 +236,16 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     the engine hash); the K=16 permutation mins run in the declared Arrow
     batch kernel (r6 — the old let-bound SQL form was 16 interpreted
     folds per row)."""
-    from pyspark.sql import types as T
     words = F.expr(dialect.tokens_expr(text_col, "spark"))
     sh = word_shingles_sql("words", n, "spark")
     d = (df.withColumn("words", words)
          .withColumn("shingles", F.expr(sh))
          .withColumn("__hs", F.expr(shingle_hashes_sql("shingles", "spark")))
          .select(F.col(id_col), "__hs"))
-    out_schema = T.StructType(
-        [d.schema[id_col]] + [T.StructField(f"mh_{i}", T.LongType())
-                              for i in range(MINHASH_K)])
-    return d.mapInArrow(_minhash_arrow_fn(id_col), out_schema)
+    return K.map_batches(
+        d, "minhash_signatures",
+        [id_col] + [f"mh_{i} long" for i in range(MINHASH_K)],
+        _minhash_arrow_fn(id_col))
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -292,14 +280,12 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     """Word hashes stay JVM-side (engine md5); the per-bit signed
     popcounts run in the declared Arrow batch kernel (r6 — the old SQL
     form was `bits` interpreted folds per row)."""
-    from pyspark.sql import types as T
     words = F.expr(dialect.tokens_expr(text_col, "spark"))
     d = (df.withColumn("words", words)
          .withColumn("__hs", F.expr(word_hashes_sql("words", "spark")))
          .select(F.col(id_col), "__hs"))
-    out_schema = T.StructType(
-        [d.schema[id_col], T.StructField("simhash", T.LongType())])
-    return d.mapInArrow(_simhash_arrow_fn(id_col, bits), out_schema)
+    return K.map_batches(d, "simhash", [id_col, "simhash long"],
+                         _simhash_arrow_fn(id_col, bits))
 
 
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
@@ -519,19 +505,17 @@ def _cc_driver_side(edges: DataFrame, limit: int) -> DataFrame | None:
     schema = T.StructType([
         T.StructField("node", edges.schema["u"].dataType),
         T.StructField("component", edges.schema["u"].dataType)])
-    spark = edges.sparkSession
-    try:
-        # r6: a pandas-backed createDataFrame becomes a JVM LocalRelation
-        # (LocalTableScan) with KNOWN small stats — downstream keep_list
-        # joins broadcast it and skip both exchanges, and execution never
-        # re-serializes the rows through a Python worker the way the
-        # plain-list path's ExistingRDD does (measured 0.40 → 0.19 s per
-        # keep_list execution at 500 components).
-        import pandas as pd
-        return spark.createDataFrame(
-            pd.DataFrame(out, columns=["node", "component"]), schema)
-    except Exception:
-        return spark.createDataFrame(out, schema)
+    # r6: a pandas-backed createDataFrame becomes a JVM LocalRelation
+    # (LocalTableScan) with KNOWN small stats — downstream keep_list joins
+    # broadcast it and skip both exchanges, and execution never
+    # re-serializes the rows through a Python worker the way a plain-list
+    # createDataFrame's ExistingRDD does (measured 0.40 → 0.19 s per
+    # keep_list execution at 500 components). pandas is a hard dependency
+    # (the image, parse and as-of stages need it), so there is no list
+    # fallback: an error here raises.
+    import pandas as pd
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame(out, columns=["node", "component"]), schema)
 
 
 def connected_components(pairs: DataFrame, src: str = "doc_a",

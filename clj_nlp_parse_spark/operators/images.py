@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clj_nlp_parse_spark.functions import kernel as K
+
 IMAGE_FEATURES_FIELDS = (
     "image_id string, entity_id string, feature_ts timestamp, "
     "phash long, phash_bucket long, "
@@ -122,15 +124,8 @@ def extract_image_features(df: DataFrame, buckets: int = 64,
                                "entity_id", "event_ts")]
     # string-typed phash: exact through pandas even when NULLs are present
     cols.append(F.col("phash").cast("string").alias("phash"))
-    return df.select(*cols).mapInPandas(run, schema=IMAGE_FEATURES_FIELDS)
-
-
-def salted(df: DataFrame, key: str, salts: int, salt_col: str = "__salt",
-           id_col: str = "image_id") -> DataFrame:
-    """Skew kill for hot keys (SURVEY.md §4.3.2): deterministic salt from a
-    row id so hot buckets split across `salts` shuffle partitions."""
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(F.col(id_col)), F.lit(salts)))
+    return df.select(*cols).mapInPandas(K.declare("image_features", run),
+                                        schema=IMAGE_FEATURES_FIELDS)
 
 
 def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clj_nlp_parse_spark.functions import kernel as K
+
 
 def dot_sql(a: str, b: str, d: str) -> str:
     if d == "spark":
@@ -36,7 +38,7 @@ def cosine_sql(a: str, b: str, d: str) -> str:
 
 
 def _cosine_arrow_fn(dim: int):
-    """mapInArrow batch scorer for candidate pairs (r6 optimization, guide
+    """Arrow batch scorer for candidate pairs (r6 optimization, guide
     §4.2 — vectorized native code inside the Arrow boundary): per batch of
     (id_a, id_b, __va, __vb) rows, compute cosine with numpy column-wise
     ACCUMULATION so every double op replays the SQL fold's exact IEEE
@@ -50,28 +52,25 @@ def _cosine_arrow_fn(dim: int):
     import numpy as np
     import pyarrow as pa
 
-    def score(batches):
-        for batch in batches:
-            n = len(batch)
-            av = (batch.column("__va").flatten()
-                  .to_numpy(zero_copy_only=False).reshape(n, dim))
-            bv = (batch.column("__vb").flatten()
-                  .to_numpy(zero_copy_only=False).reshape(n, dim))
-            dot = np.zeros(n, dtype=np.float64)
-            naa = np.zeros(n, dtype=np.float64)
-            nbb = np.zeros(n, dtype=np.float64)
-            for i in range(dim):
-                x = av[:, i].astype(np.float64)
-                y = bv[:, i].astype(np.float64)
-                dot += x * y
-                naa += x * x
-                nbb += y * y
-            na, nb = np.sqrt(naa), np.sqrt(nbb)
-            denom = np.where((na == 0.0) | (nb == 0.0), 1.0, na * nb)
-            yield pa.record_batch(
-                [batch.column("id_a"), batch.column("id_b"),
-                 pa.array(dot / denom, type=pa.float64())],
-                names=["id_a", "id_b", "cosine"])
+    def score(batch):
+        n = len(batch)
+        av = (batch.column("__va").flatten()
+              .to_numpy(zero_copy_only=False).reshape(n, dim))
+        bv = (batch.column("__vb").flatten()
+              .to_numpy(zero_copy_only=False).reshape(n, dim))
+        dot = np.zeros(n, dtype=np.float64)
+        naa = np.zeros(n, dtype=np.float64)
+        nbb = np.zeros(n, dtype=np.float64)
+        for i in range(dim):
+            x = av[:, i].astype(np.float64)
+            y = bv[:, i].astype(np.float64)
+            dot += x * y
+            naa += x * x
+            nbb += y * y
+        na, nb = np.sqrt(naa), np.sqrt(nbb)
+        denom = np.where((na == 0.0) | (nb == 0.0), 1.0, na * nb)
+        return [batch.column("id_a"), batch.column("id_b"),
+                pa.array(dot / denom, type=pa.float64())]
 
     return score
 
@@ -80,17 +79,15 @@ def _score_pairs_arrow(cand: DataFrame, vectors: DataFrame, dim: int,
                        id_col: str, vec_col: str) -> DataFrame:
     """Join candidate (id_a, id_b) pairs back to their vectors and score
     with the Arrow batch scorer; returns (id_a, id_b, cosine)."""
-    from pyspark.sql import types as T
     va = vectors.select(F.col(id_col).alias("id_a"),
                         F.col(vec_col).alias("__va"))
     vb = vectors.select(F.col(id_col).alias("id_b"),
                         F.col(vec_col).alias("__vb"))
     joined = cand.join(va, "id_a").join(vb, "id_b") \
                  .select("id_a", "id_b", "__va", "__vb")
-    out_schema = T.StructType([
-        joined.schema["id_a"], joined.schema["id_b"],
-        T.StructField("cosine", T.DoubleType())])
-    return joined.mapInArrow(_cosine_arrow_fn(dim), out_schema)
+    return K.map_batches(joined, "cosine_pairs",
+                         ["id_a", "id_b", "cosine double"],
+                         _cosine_arrow_fn(dim))
 
 
 def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int,
@@ -241,37 +238,30 @@ def _assign_cells_arrow(vectors: DataFrame, cents: list[list[float]],
     tie order as the old _probe_cells_expr struct sort."""
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql import types as T
 
     C = np.array(cents, dtype=np.float64)
     n_cells, dim = C.shape
 
-    def assign(batches):
-        for batch in batches:
-            n = len(batch)
-            v = (batch.column(vec_col).flatten()
-                 .to_numpy(zero_copy_only=False).reshape(n, dim))
-            dots = np.zeros((n, n_cells), dtype=np.float64)
-            for j in range(dim):
-                dots += v[:, j].astype(np.float64)[:, None] * C[None, :, j]
-            if nprobe == 1:
-                cell = (dots.argmax(axis=1) + 1).astype(np.int32)
-                ids, vecs = batch.column(id_col), batch.column(vec_col)
-            else:
-                order = np.argsort(-dots, axis=1, kind="stable")
-                cell = (order[:, :nprobe] + 1).astype(np.int32).reshape(-1)
-                take = pa.array(np.repeat(np.arange(n), nprobe))
-                ids = batch.column(id_col).take(take)
-                vecs = batch.column(vec_col).take(take)
-            yield pa.record_batch(
-                [ids, vecs, pa.array(cell, type=pa.int32())],
-                names=[id_col, vec_col, "__cell"])
+    def assign(batch):
+        n = len(batch)
+        v = (batch.column(vec_col).flatten()
+             .to_numpy(zero_copy_only=False).reshape(n, dim))
+        dots = np.zeros((n, n_cells), dtype=np.float64)
+        for j in range(dim):
+            dots += v[:, j].astype(np.float64)[:, None] * C[None, :, j]
+        if nprobe == 1:
+            cell = (dots.argmax(axis=1) + 1).astype(np.int32)
+            ids, vecs = batch.column(id_col), batch.column(vec_col)
+        else:
+            order = np.argsort(-dots, axis=1, kind="stable")
+            cell = (order[:, :nprobe] + 1).astype(np.int32).reshape(-1)
+            take = pa.array(np.repeat(np.arange(n), nprobe))
+            ids = batch.column(id_col).take(take)
+            vecs = batch.column(vec_col).take(take)
+        return [ids, vecs, pa.array(cell, type=pa.int32())]
 
-    inp = vectors.select(id_col, vec_col)
-    out_schema = T.StructType(
-        [inp.schema[id_col], inp.schema[vec_col],
-         T.StructField("__cell", T.IntegerType())])
-    return inp.mapInArrow(assign, out_schema)
+    return K.map_batches(vectors.select(id_col, vec_col), "ivf_cells",
+                         [id_col, vec_col, "__cell int"], assign)
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,

@@ -5,19 +5,7 @@ BOTH a Spark callable (spark, sf_dir) -> DataFrame and a DuckDB oracle SQL
 string over the pre-registered views (region nation customer supplier part
 orders lineitem events documents embeddings). The two sides are generated
 from the same rule tables (dialect.py) so arithmetic is bit-identical.
-
-Presentation sort (r6 optimization, guide §2.4): every query's FINAL
-`.repartition(1).sortWithinPartitions(cols)` replaces the old global
-`.orderBy(cols)`. A global orderBy range-partitions its input, and range
-partitioning runs a SAMPLING pass that re-executes the ENTIRE child plan —
-measured ~2x wall on every map-heavy query here (cosine_dedup_banded
-18.5 -> 9.7 s, doc_stats 1.67 -> 0.96 s at sf0.1). The replacement shuffles
-the (oracle-sized) RESULT rows once into a single partition and sorts
-there: same rows, same total order, pipeline computed ONCE. Window-spec
-orderBys and the semantic top-k `orderBy().limit()` (TakeOrdered) are
-untouched. Production consumers of the unsorted operator outputs skip this
-presentation layer entirely, so the single result partition is a property
-of the oracle gate's tiny outputs, not of the operators at scale.
+Every query's final ordering goes through `present`.
 """
 
 from __future__ import annotations
@@ -43,6 +31,23 @@ def register(name: str, oracle: str | None = None):
             ORACLES[name] = oracle
         return fn
     return deco
+
+
+def present(df: DataFrame, *cols) -> DataFrame:
+    """The presentation sort every registered query ends with (r6
+    optimization, guide §2.4): `.repartition(1).sortWithinPartitions(cols)`
+    in place of a global `.orderBy(cols)`. A global orderBy range-partitions
+    its input, and range partitioning runs a SAMPLING pass that re-executes
+    the ENTIRE child plan — measured ~2x wall on every map-heavy query here
+    (cosine_dedup_banded 18.5 -> 9.7 s, doc_stats 1.67 -> 0.96 s at sf0.1).
+    This shuffles the (oracle-sized) RESULT rows once into a single
+    partition and sorts there: same rows, same total order, pipeline
+    computed ONCE. Window-spec orderBys and the semantic top-k
+    `orderBy().limit()` (TakeOrdered) are untouched. Production consumers
+    of the unsorted operator outputs skip this presentation layer entirely,
+    so the single result partition is a property of the oracle gate's tiny
+    outputs, not of the operators at scale."""
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,7 +97,7 @@ for _nm, _ix in (("pos_first_tag", 1), ("pos_last_tag", -1)):
 )
 def q_pos_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 pos-tag-features (reference feature/lang.clj:77-111)."""
-    return features.pos_tag_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(features.pos_tag_features(_docs(spark, sf_dir)), "doc_id")
 
 
 @register(
@@ -113,7 +118,7 @@ def q_pos_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14 doc-level stats (reference README.md:269-291)."""
-    return features.token_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(features.token_features(_docs(spark, sf_dir)), "doc_id")
 
 
 _SENT_WORDS_DUCK = features.sentence_words_sql("text", "duck")
@@ -144,7 +149,7 @@ _SC = features.sentence_sentiment_sql("ws", "duck")
 )
 def q_sentiment_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 sentiment-features (reference feature/lang.clj:165-179)."""
-    return features.sentiment_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(features.sentiment_features(_docs(spark, sf_dir)), "doc_id")
 
 
 from clj_nlp_parse_spark.operators import trees as TR
@@ -167,7 +172,7 @@ def q_tree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r02 #7) onto the canonical bracket serialization of the
     engine's actual tree column (trees.py) so the feature id and the
     traversable tree can never drift apart."""
-    return features.tree_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(features.tree_features(_docs(spark, sf_dir)), "doc_id")
 
 
 @register(
@@ -190,8 +195,8 @@ def q_parse_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sr_parse_test.clj:26-49). Exploded to one row per edge; pure per-row
     array computation, zero shuffle."""
     # r6: exploded edge surface via the declared Arrow kernel
-    return TR.parse_tree_edge_rows(_docs(spark, sf_dir)) \
-             .repartition(1).sortWithinPartitions("doc_id", "child")
+    return present(TR.parse_tree_edge_rows(_docs(spark, sf_dir)),
+                   "doc_id", "child")
 
 
 @register(
@@ -213,8 +218,8 @@ def q_dep_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('mod'), everything else → root ('dep'). 1-based token indices; one
     row per token. Pure per-row computation, zero shuffle."""
     # r6: exploded edge surface via the declared Arrow kernel
-    return TR.dep_edge_rows(_docs(spark, sf_dir)) \
-             .repartition(1).sortWithinPartitions("doc_id", "dependent")
+    return present(TR.dep_edge_rows(_docs(spark, sf_dir)),
+                   "doc_id", "dependent")
 
 
 @register(
@@ -237,9 +242,10 @@ def q_go_words(spark: SparkSession, sf_dir: str) -> DataFrame:
            f"z -> named_struct("
            f"'n_go_words', cast(size(z) as bigint), "
            f"'n_distinct_go', cast(size(array_distinct(z)) as bigint))), 1)")
-    return (_docs(spark, sf_dir)
-            .select("doc_id", F.expr(let).alias("__f"))
-            .select("doc_id", "__f.*").repartition(1).sortWithinPartitions("doc_id"))
+    return (present(_docs(spark, sf_dir)
+                    .select("doc_id", F.expr(let).alias("__f"))
+                    .select("doc_id", "__f.*"),
+                    "doc_id"))
 
 
 # ------------------------------------------------- as-of join + window ops
@@ -272,12 +278,12 @@ def _q_asof(strategy: str):
         j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
                            right_ts="fts", value_cols=["fval"],
                            strategy=strategy)
-        return j.select(
+        return present(j.select(
             "event_id", "user_id",
             F.unix_millis("ts").alias("event_ts_ms"),
             F.unix_millis("fts").alias("feature_ts_ms"),
             "fval",
-        ).repartition(1).sortWithinPartitions("event_id")
+        ), "event_id")
     return q
 
 
@@ -321,12 +327,12 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
                        right_ts="fts", value_cols=["fval"],
                        direction="nearest")
-    return j.select(
+    return present(j.select(
         "event_id", "user_id",
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    ), "event_id")
 
 
 @register("asof_incremental", _ASOF_ORACLE)
@@ -344,12 +350,12 @@ def q_asof_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = asof.incremental_asof_update(
         prev, lefts, rights, batch, on=["user_id"], left_ts="ts",
         right_ts="fts", value_cols=["fval"])
-    return out.select(
+    return present(out.select(
         "event_id", "user_id",
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    ), "event_id")
 
 
 @register(
@@ -374,12 +380,12 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
                        right_ts="fts", value_cols=["fval"],
                        direction="forward")
-    return j.select(
+    return present(j.select(
         "event_id", "user_id",
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    ), "event_id")
 
 
 _ASOF_TOL_MS = 1800 * 1000  # 30 min staleness bound
@@ -411,12 +417,12 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
                        right_ts="fts", value_cols=["fval"],
                        tolerance_ms=_ASOF_TOL_MS)
-    return j.select(
+    return present(j.select(
         "event_id", "user_id",
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    ), "event_id")
 
 
 @register(
@@ -434,8 +440,9 @@ def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clj_nlp_parse_spark.operators import windows
     out = windows.with_lag_lead(_events(spark, sf_dir), {"value": 1})
     out = windows.with_lag_lead(out, {"value": -1})
-    return out.select("event_id", "user_id", "value_lag1", "value_lead1") \
-              .repartition(1).sortWithinPartitions("event_id")
+    return present(
+        out.select("event_id", "user_id", "value_lag1", "value_lead1"),
+        "event_id")
 
 
 @register(
@@ -458,7 +465,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization, 30-min gap (SURVEY.md §2.7 cumsum idiom)."""
     from clj_nlp_parse_spark.operators import windows
     out = windows.sessionize(_events(spark, sf_dir), gap_seconds=1800)
-    return out.select("event_id", "user_id", "session_id").repartition(1).sortWithinPartitions("event_id")
+    return present(out.select("event_id", "user_id", "session_id"), "event_id")
 
 
 @register(
@@ -482,12 +489,12 @@ def q_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     w3 = (Window.partitionBy("user_id").orderBy("ts", "event_id")
           .rowsBetween(-2, 0))
     wl = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
+    return present(ev.select(
         "event_id", "user_id",
         F.avg("value").over(w3).alias("roll_mean3"),
         F.max("value").over(w3).alias("roll_max3"),
         (F.col("value") - F.lag("value").over(wl)).alias("delta"),
-    ).repartition(1).sortWithinPartitions("event_id")
+    ), "event_id")
 
 
 @register(
@@ -506,12 +513,13 @@ def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     combiner-friendly hash agg; the aligned materialization a downstream
     as-of join consumes."""
     ev = _events(spark, sf_dir)
-    return (ev.groupBy("user_id", F.col("ts").cast("date").alias("day"))
-            .agg(F.count("*").cast("long").alias("n_events"),
-                 F.sum("value").alias("sum_value"),
-                 F.min("value").alias("min_value"),
-                 F.max("value").alias("max_value"))
-            .repartition(1).sortWithinPartitions("user_id", "day"))
+    day = F.col("ts").cast("date").alias("day")
+    return present(ev.groupBy("user_id", day)
+                   .agg(F.count("*").cast("long").alias("n_events"),
+                        F.sum("value").alias("sum_value"),
+                        F.min("value").alias("min_value"),
+                        F.max("value").alias("max_value")),
+                   "user_id", "day")
 
 
 @register(
@@ -543,12 +551,13 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity-key partitioning."""
     from clj_nlp_parse_spark.operators import windows
     s = windows.sessionize(_events(spark, sf_dir), gap_seconds=1800)
-    return (s.groupBy("user_id", "session_id")
-            .agg(F.count("*").cast("long").alias("n_events"),
-                 (F.unix_millis(F.max("ts")) - F.unix_millis(F.min("ts")))
-                 .cast("long").alias("duration_ms"),
-                 F.sum("value").alias("sum_value"))
-            .repartition(1).sortWithinPartitions("user_id", "session_id"))
+    return (present(s.groupBy("user_id", "session_id")
+                    .agg(F.count("*").cast("long").alias("n_events"),
+                         (F.unix_millis(F.max("ts"))
+                          - F.unix_millis(F.min("ts")))
+                         .cast("long").alias("duration_ms"),
+                         F.sum("value").alias("sum_value")),
+                    "user_id", "session_id"))
 
 
 @register(
@@ -570,7 +579,8 @@ def q_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value_n",
         F.when(F.col("event_id") % 5 == 0, F.lit(None)).otherwise(F.col("value")))
     out = windows.backfill(ev, "value_n", out_col="value_filled")
-    return out.select("event_id", "user_id", "value_filled").repartition(1).sortWithinPartitions("event_id")
+    return present(out.select("event_id", "user_id", "value_filled"),
+                   "event_id")
 
 
 # --------------------------------------------------- word-count featurizer
@@ -622,11 +632,10 @@ def q_word_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     topn = (counts.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= 3))
     tot = Window.partitionBy("label")
-    return (topn.withColumn(
+    return (present(topn.withColumn(
         "prob", F.col("c").cast("double")
         / F.sum("c").over(tot).cast("double"))
-        .select("label", "word", "prob")
-        .repartition(1).sortWithinPartitions("label", "word"))
+        .select("label", "word", "prob"), "label", "word"))
 
 
 @register("word_count_scores", _WC_ORACLE)
@@ -641,10 +650,10 @@ def q_word_count_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = fz.transform(docs, model, id_col="doc_id")
     labs = model.labels()
     stack = ", ".join(f"'{lab}', word_count_{lab}" for lab in labs)
-    return wide.select(
+    return present(wide.select(
         "doc_id",
         F.expr(f"stack({len(labs)}, {stack}) AS (label, score)"),
-    ).repartition(1).sortWithinPartitions("doc_id", "label")
+    ), "doc_id", "label")
 
 
 # ------------------------------------------------ dictionary / mention engine
@@ -684,13 +693,13 @@ def q_dict_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 token-regex/dictionary NER span tagging
     (reference tok_re.clj:112-191)."""
     tagged = D.tag_mentions(_docs(spark, sf_dir), DICT_ITEMS)
-    return (tagged.select("doc_id",
-                          F.explode("tok_re_mentions").alias("x"))
-            .select("doc_id", F.col("x.label").alias("label"),
-                    F.col("x.item_id").alias("item_id"),
-                    F.col("x.tok_beg").cast("long").alias("tok_beg"),
-                    F.col("x.tok_end").cast("long").alias("tok_end"))
-            .repartition(1).sortWithinPartitions("doc_id", "item_id", "tok_beg"))
+    return (present(tagged.select("doc_id",
+                                  F.explode("tok_re_mentions").alias("x"))
+                    .select("doc_id", F.col("x.label").alias("label"),
+                            F.col("x.item_id").alias("item_id"),
+                            F.col("x.tok_beg").cast("long").alias("tok_beg"),
+                            F.col("x.tok_end").cast("long").alias("tok_end")),
+                    "doc_id", "item_id", "tok_beg"))
 
 
 _MF_COLS_DUCK = []
@@ -717,10 +726,10 @@ def q_mention_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ents = sorted({i.label for i in DICT_ITEMS})
     # r6: the token count = size(words) == size(toks) by construction —
     # the full annotated struct drops out of the plan entirely
-    return tagged.select(
+    return present(tagged.select(
         "doc_id",
         *D.mentions_feature_cols("tok_re_mentions", "words", ents),
-    ).repartition(1).sortWithinPartitions("doc_id")
+    ), "doc_id")
 
 
 @register(
@@ -742,9 +751,9 @@ def q_mention_token_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4/O5/O7/O10 containment range join mention↔token
     (reference parse.clj:173-240)."""
     out = D.mention_token_join(_docs(spark, sf_dir), DICT_ITEMS)
-    return out.select("doc_id", "label", "item_id",
-                      F.col("pos").cast("long").alias("pos"), "word") \
-              .repartition(1).sortWithinPartitions("doc_id", "item_id", "pos")
+    return present(out.select("doc_id", "label", "item_id",
+                              F.col("pos").cast("long").alias("pos"), "word"),
+                   "doc_id", "item_id", "pos")
 
 
 # Dictionary OPTION parity (VERDICT r01 #1/#2): case_min_tok case-sensitive
@@ -807,14 +816,15 @@ def q_dict_mentions_options(spark: SparkSession, sf_dir: str) -> DataFrame:
     ner_test.clj:46-50)."""
     src = _docs(spark, sf_dir).select("doc_id", F.expr(_OPT_TEXT).alias("text"))
     tagged = D.tag_mentions(src, DICT_OPT_ITEMS, with_features=True)
-    return (tagged.select("doc_id",
-                          F.explode("tok_re_mentions").alias("x"))
-            .select("doc_id", F.col("x.label").alias("label"),
-                    F.col("x.item_id").alias("item_id"),
-                    F.col("x.tok_beg").cast("long").alias("tok_beg"),
-                    F.col("x.tok_end").cast("long").alias("tok_end"),
-                    F.expr("x.features['food-type']").alias("food_type"))
-            .repartition(1).sortWithinPartitions("doc_id", "item_id", "tok_beg"))
+    return (present(tagged.select("doc_id",
+                                  F.explode("tok_re_mentions").alias("x"))
+                    .select("doc_id", F.col("x.label").alias("label"),
+                            F.col("x.item_id").alias("item_id"),
+                            F.col("x.tok_beg").cast("long").alias("tok_beg"),
+                            F.col("x.tok_end").cast("long").alias("tok_end"),
+                            F.expr("x.features['food-type']")
+                            .alias("food_type")),
+                    "doc_id", "item_id", "tok_beg"))
 
 
 # ------------------------------------------------------------- dedup suite
@@ -837,7 +847,7 @@ _WD_CTE = (f"WITH wd AS (SELECT doc_id, text, "
     FROM h ORDER BY doc_id""",
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.exact_dedup(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(DD.exact_dedup(_docs(spark, sf_dir)), "doc_id")
 
 
 _MH_DUCK = DD.minhash_sig_sql("hs", "duck")
@@ -855,7 +865,7 @@ _MH_SIG_CTE = (_WD_CTE + f", sh AS (SELECT doc_id, "
     _MH_SIG_CTE + " SELECT * FROM sig ORDER BY doc_id",
 )
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.minhash_signatures(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(DD.minhash_signatures(_docs(spark, sf_dir)), "doc_id")
 
 
 _SIG_COLS = [f"mh_{i}" for i in range(DD.MINHASH_K)]
@@ -873,7 +883,8 @@ _BANDS_DUCK = " UNION ALL ".join(
     ORDER BY doc_a, doc_b""",
 )
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.lsh_candidate_pairs(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_a", "doc_b")
+    return present(DD.lsh_candidate_pairs(_docs(spark, sf_dir)),
+                   "doc_a", "doc_b")
 
 
 @register(
@@ -885,7 +896,7 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hh ORDER BY doc_id""",
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.simhash(_docs(spark, sf_dir), bits=32).repartition(1).sortWithinPartitions("doc_id")
+    return present(DD.simhash(_docs(spark, sf_dir), bits=32), "doc_id")
 
 
 # candidate-pair CTE core, shared verbatim by the jaccard_pairs oracle and
@@ -919,8 +930,9 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard_pairs_prefix (exact PPJoin, same oracle, measured 18.8× faster)
     or jaccard_pairs_capped. Kept registered so the pruning variants are
     provably lossless against it."""
-    return (DD.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
-            .repartition(1).sortWithinPartitions("doc_a", "doc_b"))
+    return present(
+        DD.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5),
+        "doc_a", "doc_b")
 
 
 # ------------------------------------------------------- similarity search
@@ -948,9 +960,9 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     out = SIM.brute_force_topk(emb, queries, k=5)
-    return out.select("qid", "vec_id", "cosine",
-                      F.col("rank").cast("int").alias("rank")) \
-              .repartition(1).sortWithinPartitions("qid", "rank")
+    return present(out.select("qid", "vec_id", "cosine",
+                              F.col("rank").cast("int").alias("rank")),
+                   "qid", "rank")
 
 
 # ----------------------------------------------------------- text analysis
@@ -974,7 +986,7 @@ _FP_DUCK = TS.fingerprint_sql("words", "duck")
     FROM wd ORDER BY doc_id""",
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TS.text_stats(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(TS.text_stats(_docs(spark, sf_dir)), "doc_id")
 
 
 # O9 tokens-for-mention: synthesized mention per doc (sent_index = doc_id%4
@@ -1030,9 +1042,9 @@ def q_tokens_for_mention(spark: SparkSession, sf_dir: str) -> DataFrame:
             "filter(transform(stoks, (w, i) -> "
             "named_struct('w', w, 'p', off + i)), "
             "t -> off <= t.p AND t.p < off + 2)")).alias("x"))
-    return pairs.select(
+    return present(pairs.select(
         "doc_id", F.col("x.w").alias("word"),
-        F.col("x.p").cast("long").alias("pos")).repartition(1).sortWithinPartitions("doc_id", "pos")
+        F.col("x.p").cast("long").alias("pos")), "doc_id", "pos")
 
 
 _PH_SPARK = dialect.hash32_expr(DD.norm_text_sql("text", "spark"), "spark")
@@ -1070,7 +1082,7 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming 3 (must not)."""
     allv = _phash_corpus(spark, sf_dir)
     out = DD.phash_near_dup_pairs(allv, max_hamming=2, phash_col="ph")
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
+    return present(out, "id_a", "id_b")
 
 
 def _phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1128,9 +1140,9 @@ def q_image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("id_b").alias("doc_b"))
              .unionByName(star))
     comp = DD.connected_components(edges, "doc_a", "doc_b")
-    return DD.keep_list(
-        allv.select(F.col("doc_id").alias("image_id")), comp, "image_id") \
-        .repartition(1).sortWithinPartitions("image_id")
+    return present(DD.keep_list(
+        allv.select(F.col("doc_id").alias("image_id")), comp, "image_id"),
+        "image_id")
 
 
 @register(
@@ -1154,8 +1166,8 @@ def q_image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF top-3 terms per doc (training-pipeline text feature):
     two combiner-friendly hash aggs + broadcast N + doc-window top-k."""
-    return TS.tfidf_top_terms(_docs(spark, sf_dir), k=3) \
-             .repartition(1).sortWithinPartitions("doc_id", "rank")
+    return present(TS.tfidf_top_terms(_docs(spark, sf_dir), k=3),
+                   "doc_id", "rank")
 
 
 from clj_nlp_parse_spark.operators import sketches as SK
@@ -1171,7 +1183,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the estimate itself; accuracy + mergeability property-tested)."""
     ev = _events(spark, sf_dir)
     df = ev.select((F.col("user_id") % 10).alias("g"), "event_id")
-    return SK.kmv_distinct(df, ["g"], "event_id", k=64).repartition(1).sortWithinPartitions("g")
+    return present(SK.kmv_distinct(df, ["g"], "event_id", k=64), "g")
 
 
 @register(
@@ -1201,8 +1213,8 @@ def q_cm_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = (tok.groupBy("w").agg(F.count("*").alias("c"))
            .orderBy(F.desc("c"), F.asc("w")).limit(10)
            .select(F.col("w").alias("word")))
-    return (SK.cm_point_estimates(sketch, top, item_col="word")
-            .repartition(1).sortWithinPartitions("word"))
+    return (present(SK.cm_point_estimates(sketch, top, item_col="word"),
+                    "word"))
 
 
 _SAMPLE_H = DD.h31_sql("cast(doc_id as string)", "spark")
@@ -1224,8 +1236,9 @@ def q_consistent_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples). Pure filter: pushes to the scan, no shuffle."""
     docs = _docs(spark, sf_dir)
     thr = int(0.2 * 2147483647)
-    return (docs.where(F.expr(_SAMPLE_H) < thr)
-            .select("doc_id", "lang").repartition(1).sortWithinPartitions("doc_id"))
+    return (present(docs.where(F.expr(_SAMPLE_H) < thr)
+                    .select("doc_id", "lang"),
+                    "doc_id"))
 
 
 def consistent_sample_py(doc_ids: list[int], rate: float = 0.2) -> set[int]:
@@ -1272,10 +1285,11 @@ def q_training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("size(words)").cast("long").alias("n_words"))
     w = Window.partitionBy("text_hash")
     d = q.withColumn("keep", F.col("doc_id") == F.min("doc_id").over(w))
-    return (d.where(F.col("keep") & (F.col("lang_pred") == "en")
-                    & (F.col("quality") >= 0.4) & (F.col("n_words") >= 10))
-            .select("doc_id", "lang_pred", "quality", "n_words")
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return (present(d.where(F.col("keep") & (F.col("lang_pred") == "en")
+                            & (F.col("quality") >= 0.4)
+                            & (F.col("n_words") >= 10))
+                    .select("doc_id", "lang_pred", "quality", "n_words"),
+                    "doc_id"))
 
 
 @register(
@@ -1303,7 +1317,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     ev = docs.where(F.col("doc_id") % 97 == 0)
     tr = docs.where(F.col("doc_id") % 97 != 0)
-    return DD.decontaminate(tr, ev, n=3).repartition(1).sortWithinPartitions("doc_id")
+    return present(DD.decontaminate(tr, ev, n=3), "doc_id")
 
 
 _CURATION_SQL = _WD_CTE + f"""
@@ -1354,7 +1368,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     ev = docs.where(F.col("doc_id") % 97 == 0)
     tr = docs.where(F.col("doc_id") % 97 != 0)
-    return CU.curation_decide(tr, ev, n=3).repartition(1).sortWithinPartitions("doc_id")
+    return present(CU.curation_decide(tr, ev, n=3), "doc_id")
 
 
 # oracle = the FULL recompute: incremental maintenance must be
@@ -1380,7 +1394,7 @@ def q_curation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = tr.where(F.col("doc_id") > thr)
     prev = CU.curation_decide(base, ev, n=3)
     out = CU.incremental_curation(prev, CU.hash_state(base), batch, ev, n=3)
-    return out.repartition(1).sortWithinPartitions("doc_id")
+    return present(out, "doc_id")
 
 
 @register(
@@ -1405,11 +1419,11 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
-    return (docs.select("doc_id", "lang",
-                        F.row_number().over(w).alias("rn"))
-            .where(F.col("rn") <= 40)
-            .select("doc_id", "lang")
-            .repartition(1).sortWithinPartitions("lang", "doc_id"))
+    return (present(docs.select("doc_id", "lang",
+                                F.row_number().over(w).alias("rn"))
+                    .where(F.col("rn") <= 40)
+                    .select("doc_id", "lang"),
+                    "lang", "doc_id"))
 
 
 _MIX_QUOTA_CTES = """
@@ -1463,11 +1477,11 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
     ranked = docs.select("doc_id", "lang",
                          F.row_number().over(w).alias("rn"))
-    return (ranked.join(F.broadcast(quota),
-                        ranked["lang"].eqNullSafe(quota["lang"]))
-            .where(F.col("rn") <= F.col("q"))
-            .select(ranked["doc_id"], ranked["lang"])
-            .repartition(1).sortWithinPartitions("lang", "doc_id"))
+    return (present(ranked.join(F.broadcast(quota),
+                                ranked["lang"].eqNullSafe(quota["lang"]))
+                    .where(F.col("rn") <= F.col("q"))
+                    .select(ranked["doc_id"], ranked["lang"]),
+                    "lang", "doc_id"))
 
 
 @register(
@@ -1507,11 +1521,11 @@ def q_corpus_mix_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.col("lang").alias("mix_lang"), "thr"))
     h = F.expr(f"({dialect.hash32_expr('cast(doc_id as string)', 'spark')}"
                f" % 2147483647)")
-    return (docs.join(F.broadcast(thr),
-                      docs["lang"].eqNullSafe(F.col("mix_lang")))
-            .where(h < F.col("thr"))
-            .select("doc_id", "lang")
-            .repartition(1).sortWithinPartitions("lang", "doc_id"))
+    return (present(docs.join(F.broadcast(thr),
+                              docs["lang"].eqNullSafe(F.col("mix_lang")))
+                    .where(h < F.col("thr"))
+                    .select("doc_id", "lang"),
+                    "lang", "doc_id"))
 
 
 def corpus_mix_py(docs: list[tuple], exact: bool = True) -> set[tuple]:
@@ -1658,7 +1672,7 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ((F.col("first_occ.doc_id") == F.col("doc_id"))
                        & (F.col("first_occ.chunk_pos")
                           == F.col("chunk_pos"))).alias("is_first")))
-    return _passage_doc_agg(marked).repartition(1).sortWithinPartitions("doc_id")
+    return present(_passage_doc_agg(marked), "doc_id")
 
 
 @register("passage_dedup_incremental", _PASSAGE_SQL)
@@ -1701,9 +1715,8 @@ def q_passage_dedup_incremental(spark: SparkSession, sf_dir: str
                  & (F.col("h_first.chunk_pos") == F.col("chunk_pos")))
                 .alias("is_first")))
 
-    return (incremental_passage_update(
-        prev, hist_firsts, hist_chunks, batch_chunks)
-        .repartition(1).sortWithinPartitions("doc_id"))
+    return (present(incremental_passage_update(
+        prev, hist_firsts, hist_chunks, batch_chunks), "doc_id"))
 
 
 def incremental_passage_update(prev: DataFrame, hist_firsts: DataFrame,
@@ -1833,7 +1846,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (emails first) prevents the URL rule from seeing email hosts."""
     src = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_PII_TEXT).alias("text"))
-    return (src.select(
+    return (present(src.select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(_RE_EMAIL), F.lit(0)))
         .cast("long").alias("n_emails"),
@@ -1841,8 +1854,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("n_urls"),
         F.regexp_replace(
             F.regexp_replace("text", _RE_EMAIL, "<EMAIL>"),
-            _RE_URL, "<URL>").alias("scrubbed"))
-        .repartition(1).sortWithinPartitions("doc_id"))
+            _RE_URL, "<URL>").alias("scrubbed")), "doc_id"))
 
 
 @register(
@@ -1897,21 +1909,22 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("distinct_3grams"),
         F.max("c").cast("long").alias("top_count"))
     total = F.coalesce(F.col("total_3grams"), F.lit(0))
-    return (docs.select("doc_id").join(agg, "doc_id", "left")
-            .select(
-                "doc_id",
-                total.alias("total_3grams"),
-                F.coalesce(F.col("distinct_3grams"), F.lit(0))
-                .alias("distinct_3grams"),
-                F.when(total == 0, F.lit(0.0)).otherwise(
-                    F.lit(1.0) - F.col("distinct_3grams").cast("double")
-                    / F.col("total_3grams").cast("double"))
-                .alias("dup_3gram_frac"),
-                F.when(total == 0, F.lit(0.0)).otherwise(
-                    F.col("top_count").cast("double")
-                    / F.col("total_3grams").cast("double"))
-                .alias("top_3gram_frac"))
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return (present(docs.select("doc_id").join(agg, "doc_id", "left")
+                    .select(
+                        "doc_id",
+                        total.alias("total_3grams"),
+                        F.coalesce(F.col("distinct_3grams"), F.lit(0))
+                        .alias("distinct_3grams"),
+                        F.when(total == 0, F.lit(0.0)).otherwise(
+                            F.lit(1.0)
+                            - F.col("distinct_3grams").cast("double")
+                            / F.col("total_3grams").cast("double"))
+                        .alias("dup_3gram_frac"),
+                        F.when(total == 0, F.lit(0.0)).otherwise(
+                            F.col("top_count").cast("double")
+                            / F.col("total_3grams").cast("double"))
+                        .alias("top_3gram_frac")),
+                    "doc_id"))
 
 
 def _lm_oracle() -> str:
@@ -1928,7 +1941,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     train scan -> localCheckpointed model table; one corpus scan ->
     broadcast model join -> per-doc re-agg (operators/lm.py)."""
     from clj_nlp_parse_spark.operators import lm as LM
-    return LM.fit_score(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(LM.fit_score(_docs(spark, sf_dir)), "doc_id")
 
 
 ORACLES["lm_perplexity"] = _lm_oracle()
@@ -2027,12 +2040,12 @@ def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout already guards against; twin-pinned in test_fuzz_parity
     p50 = _pctl(0.5, "p50_tokens").withColumnRenamed("lang", "__l50")
     p90 = _pctl(0.9, "p90_tokens").withColumnRenamed("lang", "__l90")
-    return (base.join(p50, F.col("lang").eqNullSafe(F.col("__l50")))
-            .join(p90, F.col("lang").eqNullSafe(F.col("__l90")))
-            .select("lang", "n_docs", "n_empty", "total_tokens",
-                    "avg_tokens", "distinct_texts", "p50_tokens",
-                    "p90_tokens")
-            .repartition(1).sortWithinPartitions("lang"))
+    return (present(base.join(p50, F.col("lang").eqNullSafe(F.col("__l50")))
+                    .join(p90, F.col("lang").eqNullSafe(F.col("__l90")))
+                    .select("lang", "n_docs", "n_empty", "total_tokens",
+                            "avg_tokens", "distinct_texts", "p50_tokens",
+                            "p90_tokens"),
+                    "lang"))
 
 
 #: target max rows sorted by one packing window task. The md5-prefix width
@@ -2148,11 +2161,11 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("__chunk") == F.col("__ochunk")))
          .drop("__olang", "__ochunk"))
     start = F.col("chunk_offset") + F.col("local_cum") - F.col("n_tokens")
-    return (c.select(
+    return present(c.select(
         "doc_id", "lang", "n_tokens",
         F.floor(start / 512).cast("long").alias("seq_id"),
-        (start % 512).cast("long").alias("seq_offset"))
-        .repartition(1).sortWithinPartitions("lang", "seq_id", "doc_id"))
+        (start % 512).cast("long").alias("seq_offset")),
+        "lang", "seq_id", "doc_id")
 
 
 def corpus_profile_py(docs: list[tuple]) -> list[tuple]:
@@ -2240,9 +2253,7 @@ def q_np_vp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_CHUNK_TEXT).alias("text"))
     # r6: both labels in one declared Arrow kernel pass
-    return (CH.chunk_rows(docs)
-            .repartition(1).sortWithinPartitions(
-                "doc_id", "label", "chunk_index"))
+    return (present(CH.chunk_rows(docs), "doc_id", "label", "chunk_index"))
 
 
 # --------------------------------------------------------- image pipeline
@@ -2361,12 +2372,11 @@ def q_image_feature_materialization(spark: SparkSession, sf_dir: str) -> DataFra
         (F.col("feature_ts") + F.expr("INTERVAL 1 SECOND"))
         .alias("event_ts"))
     out = asof.asof_join(probes, stats, on=["entity_id"])
-    return (out.select(
+    return (present(out.select(
         "entity_id",
         F.unix_millis("event_ts").alias("event_ts_ms"),
         F.unix_millis("feature_ts").alias("feature_ts_ms"),
-        "px_mean_r", "px_std", "sharpness")
-        .repartition(1).sortWithinPartitions("entity_id", "event_ts_ms"))
+        "px_mean_r", "px_std", "sharpness"), "entity_id", "event_ts_ms"))
 
 
 # -------------------------------------------------- SRL selection + verb id
@@ -2398,7 +2408,7 @@ def q_srl_best_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("score"),
         (F.col("event_id") % 2 == 0).alias("has_label"),
         (F.col("user_id") % 6 + 1).cast("int").alias("tok_count"))
-    return srl.select_best_candidates(cands).repartition(1).sortWithinPartitions("sent_id")
+    return present(srl.select_best_candidates(cands), "sent_id")
 
 
 _VERB_DUCK = dialect.hash32_expr("elected_verb", "duck")
@@ -2422,7 +2432,7 @@ def q_verb_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 verb-features with deterministic dep-root
     (reference feature/lang.clj:33-59)."""
     from clj_nlp_parse_spark.operators import srl
-    return srl.verb_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return present(srl.verb_features(_docs(spark, sf_dir)), "doc_id")
 
 
 register("asof_join_split", _ASOF_ORACLE)(_q_asof("union_window_split"))
@@ -2446,10 +2456,10 @@ def q_sentiment_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O11 sentiment-score-to-label (reference parse.clj:242-252)."""
     from clj_nlp_parse_spark.functions.parse import sentiment_label
     sf = features.sentiment_features(_docs(spark, sf_dir))
-    return sf.select(
+    return present(sf.select(
         "doc_id", F.col("sentiment_utterance").alias("sentiment"),
         sentiment_label(F.col("sentiment_utterance")).alias("sentiment_label"),
-    ).repartition(1).sortWithinPartitions("doc_id")
+    ), "doc_id")
 
 
 _PTYPE = dialect.pos_type_case_expr("x.pos_tag")
@@ -2472,13 +2482,13 @@ def q_pos_tag_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "words", tx.words_col("text")).withColumn(
         "toks", F.expr(tx.annotated_tokens_sql(
             "words", "spark", fields=("word", "pos_tag", "pos_type"))))
-    return (ann.select("doc_id", F.explode("toks").alias("x"))
-            .select("doc_id", F.col("x.word").alias("word"),
-                    F.col("x.pos_tag").alias("pos_tag"),
-                    F.coalesce(F.col("x.pos_type"), F.lit("none"))
-                    .alias("pos_type"),
-                    F.expr(_PDESC).alias("pos_description"))
-            .repartition(1).sortWithinPartitions("doc_id", "word", "pos_tag"))
+    return (present(ann.select("doc_id", F.explode("toks").alias("x"))
+                    .select("doc_id", F.col("x.word").alias("word"),
+                            F.col("x.pos_tag").alias("pos_tag"),
+                            F.coalesce(F.col("x.pos_type"), F.lit("none"))
+                            .alias("pos_type"),
+                            F.expr(_PDESC).alias("pos_description")),
+                    "doc_id", "word", "pos_tag"))
 
 
 _WC_LEMMA_ORACLE = _duck_toks_cte() + """
@@ -2515,10 +2525,10 @@ def q_word_count_scores_lemma(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = fz.transform(docs, model, id_col="doc_id")
     labs = model.labels()
     stack = ", ".join(f"'{lab}', word_count_{lab}" for lab in labs)
-    return wide.select(
+    return present(wide.select(
         "doc_id",
         F.expr(f"stack({len(labs)}, {stack}) AS (label, score)"),
-    ).repartition(1).sortWithinPartitions("doc_id", "label")
+    ), "doc_id", "label")
 
 
 _WC_CTES = _WC_ORACLE[:_WC_ORACLE.index("SELECT dd.doc_id")]
@@ -2549,9 +2559,9 @@ def q_top_count_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                              text_col="text")
     model = fz.fit(docs)
     out = fz.top_count_scores(docs, model, num_counts=2, id_col="doc_id")
-    return out.select("doc_id", "label", "score",
-                      F.col("rn").cast("int").alias("rn")) \
-              .repartition(1).sortWithinPartitions("doc_id", "rn")
+    return present(out.select("doc_id", "label", "score",
+                              F.col("rn").cast("int").alias("rn")),
+                   "doc_id", "rn")
 
 
 @register(
@@ -2581,8 +2591,8 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("event_id", "user_id", F.unix_millis("ts").alias("p_ms")))
     out = pts.join(iv, (pts.user_id == iv.user_id)
                    & (iv.beg_ms <= pts.p_ms) & (pts.p_ms <= iv.end_ms))
-    return out.select(pts.event_id, pts.user_id, iv.iv_id) \
-              .repartition(1).sortWithinPartitions("event_id", "iv_id")
+    return present(out.select(pts.event_id, pts.user_id, iv.iv_id),
+                   "event_id", "iv_id")
 
 
 _PLANES = SIM._hyperplanes(64, 6)  # embeddings dim is 64 in testdata
@@ -2613,7 +2623,7 @@ def q_cosine_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding"))
     e = emb.select("vec_id", "embedding").unionByName(dups)
     out = SIM.cosine_dedup_pairs(e, threshold=0.99, dim=64, n_planes=6)
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
+    return present(out, "id_a", "id_b")
 
 
 @register(
@@ -2669,8 +2679,7 @@ def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("id_b").alias("doc_b"))
              .unionByName(star))
     comp = DD.connected_components(edges, "doc_a", "doc_b")
-    return DD.keep_list(e.select("vec_id"), comp, "vec_id") \
-             .repartition(1).sortWithinPartitions("vec_id")
+    return present(DD.keep_list(e.select("vec_id"), comp, "vec_id"), "vec_id")
 
 
 @register(
@@ -2701,9 +2710,9 @@ def q_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     at real-corpus scale this bounds the self-join blowup. Note the
     jaccard denominator still uses FULL shingle-set sizes, so scores are
     exact for pairs whose intersection survives the cap."""
-    return (DD.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5,
-                                   max_df=20)
-            .repartition(1).sortWithinPartitions("doc_a", "doc_b"))
+    return (present(DD.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5,
+                                           max_df=20),
+                    "doc_a", "doc_b"))
 
 
 # same result set as jaccard_pairs (prefix filtering is exact) → same oracle
@@ -2719,8 +2728,8 @@ def q_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast build, both verify sides), and the self-join's broadcast
     # side otherwise recomputes the whole scan+shingle derivation
     shingled = DD.with_shingles(_docs(spark, sf_dir)).localCheckpoint()
-    return (DD.prefix_pairs_from_shingles(shingled, 0.5)
-            .repartition(1).sortWithinPartitions("doc_a", "doc_b"))
+    return (present(DD.prefix_pairs_from_shingles(shingled, 0.5),
+                    "doc_a", "doc_b"))
 
 
 _GROUPS_CTES = _JP_CORE.replace("WITH wd", "WITH RECURSIVE wd") + """
@@ -2756,8 +2765,8 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same components by recursive-CTE transitive closure — feasible at
     oracle scale precisely because the engine's iterative form is the one
     that survives 100×."""
-    return DD.dedup_groups(_docs(spark, sf_dir), threshold=0.5) \
-             .repartition(1).sortWithinPartitions("doc_id")
+    return present(DD.dedup_groups(_docs(spark, sf_dir), threshold=0.5),
+                   "doc_id")
 
 
 @register(
@@ -2785,11 +2794,10 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = DD.dedup_groups(_docs(spark, sf_dir), threshold=0.5)
     h = F.expr(f"({DD.h31_sql('CAST(component AS STRING)', 'spark')})"
                f" % 100")
-    return (groups.select(
+    return (present(groups.select(
         "doc_id", "component",
         F.when(h < 90, F.lit("train")).otherwise(F.lit("eval"))
-         .alias("split"))
-        .repartition(1).sortWithinPartitions("doc_id"))
+         .alias("split")), "doc_id"))
 
 
 # ----------------------------------------------- positional / slice (O2, O8)
@@ -2817,9 +2825,10 @@ def q_token_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
            f"'last_word', try_element_at(z, -1).word, "
            f"'slice_2_4', array_join(transform(slice(z, 2, 3), "
            f"x -> x.word), ' '))), 1)")
-    return (_docs(spark, sf_dir)
-            .select("doc_id", F.expr(let).alias("__f"))
-            .select("doc_id", "__f.*").repartition(1).sortWithinPartitions("doc_id"))
+    return (present(_docs(spark, sf_dir)
+                    .select("doc_id", F.expr(let).alias("__f"))
+                    .select("doc_id", "__f.*"),
+                    "doc_id"))
 
 
 def token_positional_py(text: str) -> tuple:
@@ -2876,15 +2885,16 @@ def q_model_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs merged into :mentions-side spans exactly as CoreNLP folds CRF tags
     into NERMentions. Pure per-row array computation, zero shuffle."""
     tagged = NER.tag_model_mentions(_docs(spark, sf_dir))
-    return (tagged.select("doc_id", "words",
-                          F.explode("model_mentions").alias("x"))
-            .select("doc_id",
-                    F.col("x.label").alias("entity_type"),
-                    F.col("x.tok_beg").cast("long").alias("tok_beg"),
-                    F.col("x.tok_end").cast("long").alias("tok_end"),
-                    F.expr("array_join(slice(words, x.tok_beg + 1, "
-                           "x.tok_end - x.tok_beg), ' ')").alias("span"))
-            .repartition(1).sortWithinPartitions("doc_id", "tok_beg"))
+    return (present(tagged.select("doc_id", "words",
+                                  F.explode("model_mentions").alias("x"))
+                    .select("doc_id",
+                            F.col("x.label").alias("entity_type"),
+                            F.col("x.tok_beg").cast("long").alias("tok_beg"),
+                            F.col("x.tok_end").cast("long").alias("tok_end"),
+                            F.expr("array_join(slice(words, x.tok_beg + 1, "
+                                   "x.tok_end - x.tok_beg), ' ')")
+                            .alias("span")),
+                    "doc_id", "tok_beg"))
 
 
 # ------------------------------------------------- mention-source union (O6)
@@ -2938,12 +2948,12 @@ def q_mention_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         body, "z")
     fused = _spark_let({"ws": dialect.tokens_expr("text", "spark")},
                        inner, "w0")
-    return (docs.select("doc_id", F.explode(F.expr(fused)).alias("x"))
-            .select("doc_id", F.col("x.label").alias("label"),
-                    F.col("x.item_id").alias("item_id"),
-                    F.col("x.tok_beg").cast("long").alias("tok_beg"),
-                    F.col("x.tok_end").cast("long").alias("tok_end"))
-            .repartition(1).sortWithinPartitions("doc_id", "item_id", "tok_beg"))
+    return (present(docs.select("doc_id", F.explode(F.expr(fused)).alias("x"))
+                    .select("doc_id", F.col("x.label").alias("label"),
+                            F.col("x.item_id").alias("item_id"),
+                            F.col("x.tok_beg").cast("long").alias("tok_beg"),
+                            F.col("x.tok_end").cast("long").alias("tok_end")),
+                    "doc_id", "item_id", "tok_beg"))
 
 
 _MFU_DICT_LABELS = {i.label for i in DICT_ITEMS}
@@ -2990,10 +3000,10 @@ def q_mention_features_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = tagged.withColumn(
         "all_mentions", F.expr("concat(tok_re_mentions, model_mentions)"))
     # r6: size(words) == size(toks) — see mention_features
-    return both.select(
+    return present(both.select(
         "doc_id",
         *D.mentions_feature_cols("all_mentions", "words", _MFU_ENTS),
-    ).repartition(1).sortWithinPartitions("doc_id")
+    ), "doc_id")
 
 
 # ------------------------------------------- F3 srl features + O15 first scan
@@ -3054,9 +3064,10 @@ def q_srl_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            f"'srl_propbank_id', cast({s['pid']} as bigint), "
            f"'srl_argument_counts', cast({s['argc']} as bigint), "
            f"'first_propbank_label', {s['first_pb']})), 1)")
-    return (_docs(spark, sf_dir)
-            .select("doc_id", F.expr(let).alias("__f"))
-            .select("doc_id", "__f.*").repartition(1).sortWithinPartitions("doc_id"))
+    return (present(_docs(spark, sf_dir)
+                    .select("doc_id", F.expr(let).alias("__f"))
+                    .select("doc_id", "__f.*"),
+                    "doc_id"))
 
 
 # --------------------------------------- O15 windowed first non-null (events)
@@ -3082,11 +3093,12 @@ def q_first_non_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     rn = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (ev.withColumn("first_value", F.first("v", ignorenulls=True).over(w))
-            .withColumn("__rn", F.row_number().over(rn))
-            .where(F.col("__rn") == 1)
-            .select("user_id", "first_value")
-            .repartition(1).sortWithinPartitions("user_id"))
+    first = F.first("v", ignorenulls=True).over(w)
+    return present(ev.withColumn("first_value", first)
+                   .withColumn("__rn", F.row_number().over(rn))
+                   .where(F.col("__rn") == 1)
+                   .select("user_id", "first_value"),
+                   "user_id")
 
 
 # ----------------------------------------------------- IVF ANN (scale path 2)
@@ -3133,9 +3145,9 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = SIM.ivf_topk(emb, queries, k=5, dim=64,
                        n_cells=SIM.choose_ivf_cells(_IVF_ORACLE_N),
                        nprobe=1)
-    return out.select("qid", "vec_id", "cosine",
-                      F.col("rank").cast("int").alias("rank")) \
-              .repartition(1).sortWithinPartitions("qid", "rank")
+    return present(out.select("qid", "vec_id", "cosine",
+                              F.col("rank").cast("int").alias("rank")),
+                   "qid", "rank")
 
 
 # ----------------------------------------------- A12 coref / A10 natlog
@@ -3174,9 +3186,8 @@ def q_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_COREF_TEXT).alias("text"))
     # r6: exploded chain-mention surface via the declared Arrow kernel
-    return (CRF.coref_rows(docs)
-            .repartition(1).sortWithinPartitions(
-                "doc_id", "chain_id", "sent_index", "token_beg"))
+    return (present(CRF.coref_rows(docs),
+                    "doc_id", "chain_id", "sent_index", "token_beg"))
 
 
 @register(
@@ -3201,8 +3212,7 @@ def q_coref_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_COREF_TEXT).alias("text"))
     # r6: per-doc aggregates via the declared Arrow kernel
-    return (CRF.coref_doc_features(docs)
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return (present(CRF.coref_doc_features(docs), "doc_id"))
 
 
 _NATLOG_DOC_CTE = ("WITH ndoc AS (SELECT doc_id, " + _NATLOG_TEXT
@@ -3224,9 +3234,8 @@ def q_natlog_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_NATLOG_TEXT).alias("text"))
     # r6: exploded token surface via the declared Arrow kernel
-    return (NLG.natlog_rows(docs)
-            .repartition(1).sortWithinPartitions(
-                "doc_id", "sent_index", "token_index"))
+    return (present(NLG.natlog_rows(docs),
+                    "doc_id", "sent_index", "token_index"))
 
 
 @register(
@@ -3251,8 +3260,7 @@ def q_natlog_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_NATLOG_TEXT).alias("text"))
     # r6: per-doc aggregates via the declared Arrow kernel
-    return (NLG.natlog_doc_features(docs)
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return (present(NLG.natlog_doc_features(docs), "doc_id"))
 
 
 # ------------------------------------------------- A13 srl struct (flat)
@@ -3293,8 +3301,7 @@ def q_srl_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_CHUNK_TEXT).alias("text"))
     # r6: flattened token surface via the declared Arrow kernel
-    return (SRL.srl_token_rows(docs)
-            .repartition(1).sortWithinPartitions("doc_id", "id"))
+    return (present(SRL.srl_token_rows(docs), "doc_id", "id"))
 
 
 # ----------------------------- banded cosine near-dup (dedup scale path)
@@ -3345,7 +3352,7 @@ def q_cosine_dedup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = SIM.cosine_dedup_pairs_banded(
         e, threshold=0.99, dim=64, n_bands=_CB_BANDS,
         planes_per_band=_CB_R)
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
+    return present(out, "id_a", "id_b")
 
 
 #: the DERIVED-path pins (VERDICT_r04 #4): the production entry point
@@ -3403,7 +3410,7 @@ def q_cosine_dedup_banded_derived(spark: SparkSession, sf_dir: str) -> DataFrame
                     "embedding"))
     e = emb.select("vec_id", "embedding").unionByName(dups)
     out = SIM.cosine_dedup_pairs_banded(e, threshold=0.99, dim=64)
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
+    return present(out, "id_a", "id_b")
 
 
 _TBS_TOKS = dialect.tokens_expr("text", "duck")
@@ -3439,10 +3446,10 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin: token_budget_select_py (tests/test_fuzz_parity.py)."""
     from clj_nlp_parse_spark.operators import curation as CU
     out = CU.token_budget_select(_docs(spark, sf_dir))
-    return (out.select("doc_id", "lang", "quality",
-                       F.col("n_bpe_tokens").cast("long")
-                       .alias("n_bpe_tokens"))
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return (present(out.select("doc_id", "lang", "quality",
+                               F.col("n_bpe_tokens").cast("long")
+                               .alias("n_bpe_tokens")),
+                    "doc_id"))
 
 
 @register(
@@ -3484,7 +3491,7 @@ def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides. Twin: token_budget_mix_py (tests/test_fuzz_parity.py)."""
     from clj_nlp_parse_spark.operators import curation as CU
     out = CU.token_budget_mix(_docs(spark, sf_dir))
-    return (out.select("doc_id", "lang", "quality",
-                       F.col("n_bpe_tokens").cast("long")
-                       .alias("n_bpe_tokens"))
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return (present(out.select("doc_id", "lang", "quality",
+                               F.col("n_bpe_tokens").cast("long")
+                               .alias("n_bpe_tokens")),
+                    "doc_id"))

@@ -74,13 +74,6 @@ def pos_description(tag: str) -> str | None:
 NONE_LABEL = "<none>"  # reference feature/util.clj none-label
 
 
-def pos_tag_type(tag: str) -> str | None:
-    for name, tags in POS_TYPE_ORDER:
-        if tag in tags:
-            return name
-    return None
-
-
 def pos_tags(type_: str | None = None) -> frozenset[str]:
     """O12 API surface (reference pos-tags, parse.clj:89-134): the tag set
     of one type, or with no argument the full tag universe (Penn table ∪
@@ -196,24 +189,10 @@ def sentiment_feature_metas() -> list[tuple[str, object]]:
         "sentiment_sentence_mean", "sentiment_sentence_variance")]
 
 
-def mentions_feature_metas(entities: list[str]) -> list[tuple[str, object]]:
-    out = []
-    for e in entities:
-        le = e.lower()
-        out += [(f"mentions_count_{le}", "numeric"),
-                (f"mentions_ratio_{le}", "numeric")]
-    return out
-
-
 def token_feature_metas() -> list[tuple[str, object]]:
     return [(n, "numeric") for n in (
         "utterance_length", "token_count", "sent_count", "mention_count",
         "token_average_length")] + [("is_question", "boolean")]
-
-
-def label_word_count_feature_metas(labels: list[str]) -> list[tuple[str, object]]:
-    """Mirror of label-word-count-feature-metas (reference word_count.clj:94-101)."""
-    return [(f"word_count_{lab}", "numeric") for lab in labels]
 
 
 FEATURE_METAS: dict[str, list[tuple[str, object]]] = {

@@ -1,6 +1,6 @@
 """Sources / sinks (SURVEY.md §2.1 S1-S5).
 
-S1 utterance ingest     — spark.read.parquet/iceberg of the input table;
+S1 utterance ingest     — spark.read.parquet of the input table;
                           `ingest_utterances` wraps raw strings (the
                           parse-object analog, stanford.clj:518-525).
 S2 corpus file read     — line-oriented text corpus → one utterance
@@ -133,53 +133,6 @@ def read_regex_features(features_path: str) -> list[dict]:
     """Reload the S3 sidecar (round-trip tested)."""
     with open(features_path) as fh:
         return json.load(fh)
-
-
-def read_images_table(spark: SparkSession, location: str,
-                      snapshot_id: int | None = None,
-                      fmt: str = "auto") -> "DataFrame":
-    """S1 production path: read the image+caption table.
-
-    Iceberg (the north_rule target) when the runtime has the Iceberg
-    catalog configured — with optional snapshot pinning so checkpoint
-    manifests can record exactly which snapshot a run consumed
-    (`VERSION AS OF`, checkpoint.py). Plain parquet fallback in this
-    sandbox (no Iceberg jars present).
-    """
-    if fmt == "auto":
-        fmt = "iceberg" if ("/" not in location
-                            or location.startswith("iceberg.")) else "parquet"
-    if fmt == "iceberg":
-        try:
-            r = spark.read.format("iceberg")
-            if snapshot_id is not None:
-                r = r.option("snapshot-id", str(snapshot_id))
-            return r.load(location)
-        except Exception as e:  # jars absent in sandbox
-            raise NotImplementedError(
-                "Iceberg runtime not available in this environment; "
-                "pass a parquet path instead") from e
-    if snapshot_id is not None:
-        raise ValueError("snapshot pinning requires the iceberg format")
-    return spark.read.parquet(location)
-
-
-def current_snapshot_id(spark: SparkSession, table: str) -> str:
-    """Snapshot identity for lineage manifests: Iceberg snapshot id when
-    available, else a fingerprint of the parquet file listing."""
-    try:
-        return str(spark.sql(
-            f"SELECT snapshot_id FROM {table}.snapshots "
-            f"ORDER BY committed_at DESC LIMIT 1").collect()[0][0])
-    except Exception:
-        import hashlib
-        import os
-        if os.path.isdir(table):
-            names = sorted(
-                f"{f}:{os.path.getsize(os.path.join(table, f))}"
-                for f in os.listdir(table) if not f.startswith("_"))
-            return hashlib.md5("|".join(names).encode()).hexdigest()[:16]
-        raise
 
 
 def write_feature_table(df: "DataFrame", path: str,

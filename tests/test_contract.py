@@ -145,7 +145,8 @@ def test_choose_ivf_cells_rule():
 
 def test_dist_zip_matches_source():
     """The committed spark-submit zip must match the working tree byte for
-    byte (review r04: a stale zip shipped superseded scale semantics).
+    byte, with no entry the tree lacks (review r04: a stale zip shipped
+    superseded scale semantics).
     Regenerate with `python tools/make_pyfiles.py` whenever the package
     changes."""
     import os
@@ -156,6 +157,7 @@ def test_dist_zip_matches_source():
     assert os.path.exists(zpath), "dist zip missing — run make_pyfiles.py"
     z = zipfile.ZipFile(zpath)
     names = set(z.namelist())
+    sources = set()
     pkg = os.path.join(root, "clj_nlp_parse_spark")
     for dirpath, _dirs, files in os.walk(pkg):
         if "__pycache__" in dirpath:
@@ -165,9 +167,12 @@ def test_dist_zip_matches_source():
                 continue
             full = os.path.join(dirpath, f)
             arc = os.path.relpath(full, root)
+            sources.add(arc)
             assert arc in names, f"{arc} missing from dist zip — regenerate"
             assert z.read(arc) == open(full, "rb").read(), \
                 f"{arc} differs from dist zip — regenerate with make_pyfiles"
+    stale = sorted(names - sources)
+    assert not stale, f"dist zip entries with no source file: {stale}"
 
 
 def test_purge_stale_scratch_age_gate(tmp_path, monkeypatch):

@@ -6,8 +6,6 @@ oracle gate and these tests fail independently (VERDICT_r03 #7)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from clj_nlp_parse_spark.operators import coref as CRF
 from clj_nlp_parse_spark.operators import natlog as NLG
 
@@ -29,12 +27,7 @@ def test_coref_chains_golden(spark):
     doc = _one_doc(spark, "customer spark likes scan . "
                           "the customer spark waits . "
                           "scan merge not scan")
-    rows = [tuple(r) for r in
-            CRF.add_coref(doc).select(F.explode("coref").alias("c"))
-            .select("c.chain_id", "c.mention_key", "c.label",
-                    "c.sent_index", "c.token_beg", "c.token_end",
-                    "c.head_index", "c.chain_size")
-            .collect()]
+    rows = [tuple(r)[1:] for r in CRF.coref_rows(doc).collect()]
     want = [  # textual order
         (1, "customer spark", "ORGANIZATION", 0, 1, 3, 2, 2),
         (2, "scan", "OPERATION", 0, 4, 5, 4, 2),
@@ -48,10 +41,8 @@ def test_coref_lemma_match_clusters_inflections(spark):
     # the clustering key is the LEMMA — "scans" and "scan" corefer even
     # though their surface forms differ (exact text/lemma match rule)
     doc = _one_doc(spark, "scan waits . scans run")
-    rows = [tuple(r) for r in
-            CRF.add_coref(doc).select(F.explode("coref").alias("c"))
-            .select("c.chain_id", "c.mention_key", "c.sent_index")
-            .collect()]
+    rows = [tuple(r) for r in CRF.coref_rows(doc)
+            .select("chain_id", "mention_key", "sent_index").collect()]
     assert rows == [(1, "scan", 0), (1, "scan", 1)]
 
 
@@ -60,27 +51,19 @@ def test_coref_empty_and_no_chain_docs(spark):
         [(1, ""), (2, None), (3, "..!!"), (4, "customer only once"),
          (5, "xyzzy xyzzy")],  # 5: repeated but not a gazetteer mention
         "doc_id long, text string")
-    out = {r.doc_id: r.coref for r in CRF.add_coref(docs).collect()}
-    assert all(out[i] == [] for i in (1, 2, 3, 4, 5))
+    assert CRF.coref_rows(docs).count() == 0
+    feats = {tuple(r) for r in CRF.coref_doc_features(docs).collect()}
+    assert feats == {(i, 0, 0, 0, 0.0) for i in (1, 2, 3, 4, 5)}
 
 
 def test_coref_adjacent_same_type_is_one_mention_not_two(spark):
     # run-merging: "scan merge" is ONE OPERATION mention; two isolated
     # "scan merge" occurrences then chain with each other
     doc = _one_doc(spark, "scan merge waits . scan merge runs")
-    rows = [tuple(r) for r in
-            CRF.add_coref(doc).select(F.explode("coref").alias("c"))
-            .select("c.chain_id", "c.mention_key", "c.token_beg",
-                    "c.token_end", "c.chain_size").collect()]
+    rows = [tuple(r) for r in CRF.coref_rows(doc)
+            .select("chain_id", "mention_key", "token_beg", "token_end",
+                    "chain_size").collect()]
     assert rows == [(1, "scan merge", 1, 3, 2), (1, "scan merge", 1, 3, 2)]
-
-
-def test_coref_plan_is_pure_projection(spark):
-    # per-doc clustering → zero shuffle, zero Python
-    doc = _one_doc(spark, "customer . customer")
-    plan = CRF.add_coref(doc)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
 # --------------------------------------------------------------- A10 natlog
@@ -89,9 +72,8 @@ def test_natlog_polarity_golden(spark):
     #   scan: 0 negs before → up; not: 0 → up; slow: 1 → down;
     #   never: 1 → down; fast: 2 → up (nested negations cancel)
     doc = _one_doc(spark, "scan not slow never fast . all big table")
-    rows = {(r.sent_index, r.token_index): r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+    rows = {(r.sent_index, r.token_index): r
+            for r in NLG.natlog_rows(doc).collect()}
     pol = {k: v.polarity for k, v in rows.items()}
     assert pol == {(0, 1): "up", (0, 2): "up", (0, 3): "down",
                    (0, 4): "down", (0, 5): "up",
@@ -103,9 +85,7 @@ def test_natlog_negation_operator_spec_golden(spark):
     # quantifier range = the operator token [2,3), subject = the whole
     # remaining scope [3,6), object empty [6,6), head = 1 (0-based)
     doc = _one_doc(spark, "scan not slow never fast")
-    rows = {r.token_index: r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+    rows = {r.token_index: r for r in NLG.natlog_rows(doc).collect()}
     nt = rows[2]
     assert (nt.word, nt.operator) == ("not", "not")
     assert (nt.quant_beg, nt.quant_end, nt.quant_head) == (2, 3, 1)
@@ -121,9 +101,7 @@ def test_natlog_quantifier_operator_spec_golden(spark):
     # "every" at i=1 in "every big table" (n=3): subject = restrictor
     # token [2,3), object = body [3,4), quant range [1,2), head 0
     doc = _one_doc(spark, "every big table")
-    rows = {r.token_index: r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+    rows = {r.token_index: r for r in NLG.natlog_rows(doc).collect()}
     ev = rows[1]
     assert ev.operator == "every"
     assert (ev.subj_beg, ev.subj_end) == (2, 3)
@@ -137,9 +115,7 @@ def test_natlog_quantifier_at_sentence_end_ranges_clamp(spark):
     # trailing quantifier: restrictor/body clamp to the sentence end —
     # subject [n+1, n+1) and object [n+1, n+1) are both empty, not OOB
     doc = _one_doc(spark, "table all")
-    rows = {r.token_index: r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+    rows = {r.token_index: r for r in NLG.natlog_rows(doc).collect()}
     al = rows[2]
     assert (al.subj_beg, al.subj_end) == (3, 3)
     assert (al.obj_beg, al.obj_end) == (3, 3)
@@ -148,16 +124,9 @@ def test_natlog_quantifier_at_sentence_end_ranges_clamp(spark):
 def test_natlog_empty_docs(spark):
     docs = spark.createDataFrame(
         [(1, ""), (2, None), (3, "?!")], "doc_id long, text string")
-    out = {r.doc_id: r.natlog for r in NLG.add_natlog(docs).collect()}
-    assert all(out[i] == [] for i in (1, 2, 3))
-
-
-def test_natlog_plan_is_pure_projection(spark):
-    doc = _one_doc(spark, "not scan")
-    plan = (NLG.add_natlog(doc)._jdf.queryExecution().executedPlan()
-            .toString())
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+    assert NLG.natlog_rows(docs).count() == 0
+    feats = {tuple(r) for r in NLG.natlog_doc_features(docs).collect()}
+    assert feats == {(i, 0, 0, 0, 0.0) for i in (1, 2, 3)}
 
 
 # ------------------------------------------------------------ Python twins
@@ -235,20 +204,13 @@ _VOCAB = (
 
 
 def _twin_compare(spark, texts):
-    from pyspark.sql import functions as F
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got_c = sorted(
-        (r.doc_id,) + tuple(r.c) for r in
-        CRF.add_coref(df).select("doc_id", F.explode("coref").alias("c"))
-        .collect())
+    got_c = sorted(tuple(r) for r in CRF.coref_rows(df).collect())
     want_c = sorted((i,) + row for i, t in enumerate(texts)
                     for row in coref_py(t))
     assert got_c == want_c
-    got_n = sorted(
-        (r.doc_id,) + tuple(r.t) for r in
-        NLG.add_natlog(df).select("doc_id", F.explode("natlog").alias("t"))
-        .collect())
+    got_n = sorted(tuple(r) for r in NLG.natlog_rows(df).collect())
     want_n = sorted((i,) + row for i, t in enumerate(texts)
                     for row in natlog_py(t))
     assert got_n == want_n
@@ -323,23 +285,3 @@ def test_coref_natlog_python_twin_hypothesis_sentenceless(spark):
         _twin_compare(spark, [text, " . ".join(parts)])
 
     check()
-
-
-def test_aligned_polarity_segments(spark):
-    # direct pin of the r5 aligned-polarity array: no negations,
-    # negation first, negation last, all negations, empty sentence
-    from clj_nlp_parse_spark.operators.natlog import aligned_polarity_sql
-
-    def arr(np_lit, n):
-        return spark.sql(
-            f"SELECT {aligned_polarity_sql(np_lit, str(n))} AS a"
-        ).collect()[0].a
-
-    assert arr("cast(array() as array<int>)", 3) == ["up"] * 3
-    # neg at position 1: token 1 itself is 'up' (strictly before), rest down
-    assert arr("array(1)", 4) == ["up", "down", "down", "down"]
-    # neg at the last position flips nothing visible
-    assert arr("array(4)", 4) == ["up", "up", "up", "up"]
-    # all four tokens negations: parity alternates
-    assert arr("array(1,2,3,4)", 4) == ["up", "down", "up", "down"]
-    assert arr("cast(array() as array<int>)", 0) == []

@@ -555,10 +555,9 @@ def test_streaming_asof_buffered_timeout_flush_via_other_key(spark, tmp_path):
 
 
 def test_streaming_coref_natlog_match_batch(spark, tmp_path):
-    # the A12/A10 annotators are pure Catalyst projections, so they run on
-    # a stream UNCHANGED — availableNow over a file source must reproduce
-    # the batch chains/polarity exactly (the composability contract every
-    # zero-shuffle annotator in this engine keeps)
+    # the A12/A10 annotators are per-document Arrow kernels, so they run
+    # on a stream unchanged — availableNow over a file source must
+    # reproduce the batch chains/polarity rows exactly
     from clj_nlp_parse_spark.operators import coref as CRF
     from clj_nlp_parse_spark.operators import natlog as NLG
     docs = spark.createDataFrame(
@@ -570,59 +569,21 @@ def test_streaming_coref_natlog_match_batch(spark, tmp_path):
     docs.coalesce(1).write.mode("overwrite").parquet(p)
     sdf = spark.readStream.schema(docs.schema).parquet(p)
 
-    sink_c = str(tmp_path / "cn_coref")
-    ST.run_available_now_to_parquet(
-        CRF.add_coref(sdf).select(
-            "doc_id", F.explode("coref").alias("c")).select("doc_id", "c.*"),
-        sink_c, str(tmp_path / "cn_coref_ckpt"))
-    got_c = sorted(tuple(r) for r in spark.read.parquet(sink_c).collect())
-    want_c = sorted(tuple(r) for r in
-                    CRF.add_coref(docs).select(
-                        "doc_id", F.explode("coref").alias("c"))
-                    .select("doc_id", "c.*").collect())
-    assert got_c == want_c and len(got_c) == 2  # doc 1's chain
-
-    sink_n = str(tmp_path / "cn_natlog")
-    ST.run_available_now_to_parquet(
-        NLG.add_natlog(sdf).select(
-            "doc_id", F.explode("natlog").alias("t")).select("doc_id", "t.*"),
-        sink_n, str(tmp_path / "cn_natlog_ckpt"))
-    got_n = sorted(tuple(r) for r in spark.read.parquet(sink_n).collect())
-    want_n = sorted(tuple(r) for r in
-                    NLG.add_natlog(docs).select(
-                        "doc_id", F.explode("natlog").alias("t"))
-                    .select("doc_id", "t.*").collect())
-    assert got_n == want_n and len(got_n) == 14  # 6 + 8 tokens
+    for name, op, n_rows in (("coref", CRF.coref_rows, 2),  # doc 1's chain
+                             ("natlog", NLG.natlog_rows, 14)):  # 6 + 8
+        sink = str(tmp_path / f"cn_{name}")
+        ST.run_available_now_to_parquet(
+            op(sdf), sink, str(tmp_path / f"cn_{name}_ckpt"))
+        got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
+        want = sorted(tuple(r) for r in op(docs).collect())
+        assert got == want and len(got) == n_rows
 
 
 def test_streaming_srl_tokens_match_batch(spark, tmp_path):
-    # A13: the SRL token struct (dependency label → function tag →
-    # propbank sense) is derived from the dep tree, itself a pure
-    # Catalyst projection — so the whole surface streams UNCHANGED
-    # (VERDICT_r04 #7, completing the annotator set with coref/natlog)
-    from clj_nlp_parse_spark import dialect
+    # A13: the SRL token rows (dependency label → function tag → propbank
+    # sense) come from a per-document Arrow kernel, so the whole surface
+    # streams unchanged (completing the annotator set with coref/natlog)
     from clj_nlp_parse_spark.operators import srl as SRL
-    from clj_nlp_parse_spark.operators import trees as TR
-
-    def srl_cols(df):
-        d = (df
-             .withColumn("ws", F.expr(dialect.tokens_expr("text", "spark")))
-             .withColumn("tg", F.expr(
-                 f"transform(ws, t -> "
-                 f"({dialect.pos_case_expr('t', 'spark')}))"))
-             .select("doc_id", "ws", "tg",
-                     F.explode(F.expr(TR.tree_expr("ws", "dep", tags="tg")))
-                     .alias("e")))
-        return d.select(
-            "doc_id",
-            F.col("e.dependent").cast("long").alias("id"),
-            F.expr("try_element_at(ws, e.dependent)").alias("word"),
-            F.col("e.head").cast("long").alias("head_id"),
-            F.col("e.label").alias("dependency_label"),
-            F.expr(SRL.function_tag_sql("e.label")).alias("function_tag"),
-            F.expr(SRL.propbank_sql("ws", "tg", "e.dependent", "spark"))
-            .alias("propbank"))
-
     docs = spark.createDataFrame(
         [(1, "the customer is running quickly . scan waits"),
          (2, "table merge sort"), (3, ""), (4, None)],
@@ -632,9 +593,9 @@ def test_streaming_srl_tokens_match_batch(spark, tmp_path):
     sdf = spark.readStream.schema(docs.schema).parquet(p)
     sink = str(tmp_path / "srl_sink")
     ST.run_available_now_to_parquet(
-        srl_cols(sdf), sink, str(tmp_path / "srl_ckpt"))
+        SRL.srl_token_rows(sdf), sink, str(tmp_path / "srl_ckpt"))
     got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    want = sorted(tuple(r) for r in srl_cols(docs).collect())
+    want = sorted(tuple(r) for r in SRL.srl_token_rows(docs).collect())
     assert got == want and len(got) >= 10
 
 
